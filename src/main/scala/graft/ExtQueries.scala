@@ -1437,13 +1437,13 @@ object ExtQueries {
       // one NN-Descent round (Dong et al. 2011): candidates = current
       // edges ∪ neighbors-of-neighbors, exact re-score, top-k — recall
       // vs the exact graph is monotone non-decreasing by construction
-      Similarity.knnGraphRefine(embs(s, dir), k = KnnGraphK)),
+      Similarity.knnGraphRefineIter(embs(s, dir), k = KnnGraphK, rounds = 1)),
     "knn_graph_refine_iter_embeddings" -> ((s: SparkSession, dir: String) =>
       // NN-Descent to fixed depth: each round expands candidates two
       // hops over the PREVIOUS round's edges and re-scores exactly —
       // per-vertex recall is monotone non-decreasing in rounds;
-      // rounds=1 is spec-pinned bit-identical to the one-round key,
-      // and the oracle unrolls rounds as CTE stages (the
+      // the one-round key is this kernel at rounds=1, and the oracle
+      // unrolls rounds as CTE stages (the
       // Lloyd/LR/label-prop trajectory recipe)
       Similarity.knnGraphRefineIter(embs(s, dir), k = KnnGraphK,
         rounds = RefineRounds)),

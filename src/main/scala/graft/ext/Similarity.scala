@@ -34,9 +34,6 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.cosineSim(a, b)
 
-  /** Brute-force cosine top-k against a constant probe vector.
-    * The probe is a literal array — broadcast implicitly in the plan.
-    */
   /** k for the recall@k regression gates (ann / ivf / pq): ONE
     * constant, interpolated into both the engine lambdas and the
     * oracle SQL (denominator, inner LIMITs, the k row) so the metric
@@ -47,6 +44,9 @@ object Similarity {
     */
   val RecallK = 10
 
+  /** Brute-force cosine top-k against a constant probe vector.
+    * The probe is a literal array — broadcast implicitly in the plan.
+    */
   def topK(embeddings: DataFrame, probe: Seq[Float], k: Int = 10): DataFrame = {
     val probeCol = array(probe.map(lit): _*)
     embeddings
@@ -165,11 +165,6 @@ object Similarity {
 
   // ------------------------------------------------------------------ IVF
 
-  /** IVF index: deterministic centroids (the first `nCentroids` vectors
-    * by vec_id — a stand-in for k-means, which would converge on real
-    * data); every vector assigned to its nearest centroid in one pass
-    * with the centroid set broadcast.
-    */
   /** Seed centroids: the first `nCentroids` vectors by vec_id — the
     * deterministic k-means init (k-means++ would sharpen it; the seeds
     * only need to be spread enough for Lloyd to converge).
@@ -198,7 +193,9 @@ object Similarity {
       cents => if (portable) nearestCentroidPortable(cents) else nearestCentroid(cents))
 
   /** [[kMeansCentroids]] with the TWO-LEVEL assignment inside every
-    * Lloyd iteration ([[nearestCentroidTwoLevel]]): per-row cost drops
+    * Lloyd iteration ([[TwoLevel]], routed to its broadcast-join
+    * kernels past [[GraphLiteralMaxTerms]] plan floats, where the CASE
+    * chains stop being buildable): per-row cost drops
     * from O(k·dim) to O(2√k·dim), which is what keeps TRAINING
     * sub-linear when nCentroids scales ∝ corpus (at k=512 the flat
     * literal argmin dominates the whole train phase — SCALE.md r9).
@@ -213,19 +210,8 @@ object Similarity {
       nCentroids: Int,
       iterations: Int = 3,
       superK: Int = 0): Seq[(Long, Seq[Float])] =
-    // AUTO-ROUTE past the literal-plan cliff (r15 — the r14
-    // knnGraphHier recipe applied to the trainer): past
-    // [[GraphLiteralMaxTerms]] plan floats the two-level CASE chain
-    // stops being buildable/compilable, so each Lloyd iteration
-    // assigns via the broadcast-join kernel instead — spec-pinned
-    // bit-equal to the literal assignment, so the switch is purely
-    // physical
     kMeansLoopDf(embeddings, nCentroids, iterations, portable = false,
-      (df, cents) =>
-        if (SuperProbeDefault.toLong * cents.size * cents.head._2.length >
-            GraphLiteralMaxTerms)
-          twoLevelJoinAssigned(df, cents, superK, SuperProbeDefault, carry = Nil)
-        else df.withColumn("centroid_id", nearestCentroidTwoLevel(cents, superK)))
+      (df, cents) => new TwoLevel(cents, superK).assign(df, Nil))
 
   private def kMeansLoop(
       embeddings: DataFrame,
@@ -319,12 +305,6 @@ object Similarity {
       .map(r => r.getLong(0) -> r.getSeq[Float](1))
       .sortBy(_._1).toSeq)
 
-  /** Assign every vector to its nearest centroid in ONE narrow
-    * projection: the tiny centroid set is folded into literal
-    * expressions (nCentroids codegen'd cosine kernels per row, zero
-    * exchanges). The crossJoin+window alternative shuffles nCentroids×
-    * the data just to pick an argmin.
-    */
   /** Literal-argmin nearest-centroid expression over `embedding`:
     * array_min over struct(dist, centroid_id) = argmin with the same
     * (dist asc, centroid_id asc) tie-break as an ORDER BY would give.
@@ -344,6 +324,12 @@ object Similarity {
     array_min(scored)
   }
 
+  /** Assign every vector to its nearest centroid in ONE narrow
+    * projection: the tiny centroid set is folded into literal
+    * expressions (nCentroids codegen'd cosine kernels per row, zero
+    * exchanges). The crossJoin+window alternative shuffles nCentroids×
+    * the data just to pick an argmin.
+    */
   def ivfAssignTo(
       embeddings: DataFrame,
       centroids: Seq[(Long, Seq[Float])]): DataFrame =
@@ -377,13 +363,18 @@ object Similarity {
     * `(d = -cosine@6dp, cid)` — for callers that need the winning
     * similarity as well as the id (cell diagnostics).
     */
-  def nearestCentroidScoredPortable(centroids: Seq[(Long, Seq[Float])]): Column = {
-    val scored = array(centroids.map { case (cid, v) =>
-      val cvec = array(v.map(lit): _*)
-      struct(round(-cosine(col("embedding"), cvec), 6).as("d"), lit(cid).as("cid"))
+  def nearestCentroidScoredPortable(centroids: Seq[(Long, Seq[Float])]): Column =
+    array_min(cellStructs(centroids))
+
+  /** The per-centroid `(d = -cosine@6dp, cid)` structs of `embedding` —
+    * the one 6-dp ranking term of the portable argmin, [[probeCellsOf]]
+    * and the two-level probe lists.
+    */
+  private def cellStructs(centroids: Seq[(Long, Seq[Float])]): Column =
+    array(centroids.map { case (cid, v) =>
+      struct(round(-cosine(col("embedding"), array(v.map(lit): _*)), 6).as("d"),
+        lit(cid).as("cid"))
     }.toIndexedSeq: _*)
-    array_min(scored)
-  }
 
   /** Per-cell IVF index diagnostics over the deterministic seed
     * centroids: vector count and the min/mean/max similarity of each
@@ -710,27 +701,18 @@ object Similarity {
   /** [[knnGraph]] with BOTH sides two-level — the production variant
     * at corpus-scaled nCentroids, where the flat literal argmin's
     * O(n·k·dim) assignment dominates (measured 18.5×/decade at k ∝ n,
-    * SCALE.md r13 — the same law D4's flat path hit): assignment via
-    * [[nearestCentroidTwoLevel]], probe lists via the two-level
-    * cell ranking below. Edge semantics within a probed cell are
-    * identical (same 6-dp cosine, same rank tie-breaks); only the
-    * probed CELL SETS differ by the coarse-quantizer approximation —
-    * the [[semanticPairsHier]] caveat, and the declared oracle-checked
-    * key stays on the flat portable path. With few enough super-cells
-    * (≤ superProbe) both stages fall back to the flat ranking, so the
-    * hier variant degrades to [[knnGraph]] EXACTLY (spec-pinned).
+    * SCALE.md r13 — the same law D4's flat path hit): assignment and
+    * probe lists come from one [[TwoLevel]] assigner, which routes to
+    * its broadcast-join kernels past [[GraphLiteralMaxTerms]]
+    * (bit-identical, measured 15.5× at nc=640). Edge semantics within
+    * a probed cell are identical (same 6-dp cosine, same rank
+    * tie-breaks, the shared [[graphTail]]); only the probed CELL SETS
+    * differ by the coarse-quantizer approximation — the
+    * [[semanticPairsHier]] caveat, and the declared oracle-checked key
+    * stays on the flat portable path. With few enough super-cells
+    * (≤ superProbe) both stages fall back to the flat PORTABLE ranking,
+    * so the hier variant degrades to [[knnGraph]] EXACTLY (spec-pinned).
     */
-  /** Literal-expression budget for the two-level graph kernels
-    * (superProbe·nCentroids·dim floats in the probe CASE chains):
-    * nc=640/dim=64/superProbe=2 sits at ~82k terms and measured
-    * 19.6 s literal vs 1.26 s as data (SCALE.md r14) — compilation
-    * dominates well before the plan stops building. [[knnGraphHier]]
-    * auto-routes to [[knnGraphHierJoin]] above this budget; the two
-    * are spec-pinned bit-identical, so the switch is purely physical
-    * (nc=160 at ~20k terms stays literal, where literals win).
-    */
-  val GraphLiteralMaxTerms: Long = 50000L
-
   def knnGraphHier(
       embeddings: DataFrame,
       k: Int = 4,
@@ -738,230 +720,16 @@ object Similarity {
       nProbe: Int = 4,
       superK: Int = 0,
       superProbe: Int = SuperProbeDefault): DataFrame = {
-    val cents = seedCentroids(embeddings, nCentroids)
-    // fallback parity: when every super-cell is probed the hier path
-    // must equal [[knnGraph]] BIT-FOR-BIT, so the degraded assignment
-    // is the same PORTABLE flat argmin the flat graph uses (the
-    // two-level argmin's own fallback is the unrounded flat argmin,
-    // which can split 6-dp ties differently)
-    val k0 = if (superK > 0) superK
-      else math.max(1, math.round(math.sqrt(cents.size.toDouble)).toInt)
-    // the super-cell partition is computed ONCE and passed to both the
-    // fallback check and the probe lists (r13 review: three separate
-    // superCells runs per graph build — a k-point driver Lloyd each —
-    // added up at production nCentroids); the assignment expression
-    // recomputes internally behind nearestCentroidTwoLevel's fixed API,
-    // the one remaining duplicate run
-    val cells = superCells(cents, k0)
-    // route past the literal-plan cliff: the probe-list CASE chains
-    // carry ~superProbe·k·dim literal floats — as data instead when
-    // that exceeds the budget (bit-identical result, measured 15.5×
-    // at nc=640). The collected cents/cells ride along — the route
-    // never re-runs the seed collect or the driver Lloyd (r14 review)
-    if (cents.nonEmpty &&
-        superProbe.toLong * cents.size * cents.head._2.length > GraphLiteralMaxTerms)
-      return knnGraphHierJoinWith(embeddings, cents, cells, k, nProbe, superProbe)
-    val assignExpr =
-      if (cells.size <= superProbe) nearestCentroidPortable(cents)
-      else nearestCentroidTwoLevel(cents, superK, superProbe)
-    val assigned = embeddings
-      .withColumn("centroid_id", assignExpr)
-      .select(col("centroid_id"), col("vec_id"), col("embedding"), col("label"))
-    val probeCells = embeddings.select(
-      col("vec_id").as("probe_id"), col("embedding").as("_pe"),
-      explode(probeCellsTwoLevel(cents, cells, nProbe, superProbe))
-        .as("centroid_id"))
-    graphTail(assigned, probeCells, k)
+    val tl = new TwoLevel(seedCentroids(embeddings, nCentroids), superK,
+      superProbe, portableFlat = true)
+    graphTail(
+      tl.assign(embeddings, Seq("label"))
+        .select(col("centroid_id"), col("vec_id"), col("embedding"), col("label")),
+      tl.probeCells(
+        embeddings.select(col("vec_id").as("probe_id"), col("embedding")), nProbe),
+      k)
   }
 
-  /** The two-level analogue of [[probeCellsOf]]'s per-row cell
-    * ranking: rank ≈√k super-centroids, concatenate the `superProbe`
-    * best supers' member (dist, cid) structs, and take the `nProbe`
-    * best cells of that union — plan size O(superProbe·k·dim) like
-    * [[nearestCentroidTwoLevel]], per-row kernels ≈(1+superProbe)·√k
-    * instead of k. Ranking convention matches [[probeCellsOf]]
-    * (6-dp cosine desc, cid asc) so the fallback (supers ≤ superProbe
-    * → rank ALL cells) is bit-identical to the flat probe list.
-    */
-  private def probeCellsTwoLevel(
-      centroids: Seq[(Long, Seq[Float])],
-      cells: Seq[(Seq[Float], Seq[(Long, Seq[Float])])],
-      nProbe: Int,
-      superProbe: Int): Column = {
-    require(superProbe >= 1, s"superProbe must be >= 1: $superProbe")
-    def cellStructs(members: Seq[(Long, Seq[Float])]): Column =
-      array(members.map { case (cid, v) =>
-        struct(round(-cosine(col("embedding"), array(v.map(lit): _*)), 6).as("d"),
-          lit(cid).as("cid"))
-      }.toIndexedSeq: _*)
-    val union =
-      if (cells.size <= superProbe) cellStructs(centroids)
-      else {
-        val ranked = array_sort(array(cells.zipWithIndex.map { case ((sv, _), si) =>
-          struct((-cosine(col("embedding"), array(sv.map(lit): _*))).as("d"),
-            lit(si).as("sid"))
-        }.toIndexedSeq: _*))
-        val branches = cells.zipWithIndex.map { case ((_, members), si) =>
-          si -> cellStructs(members)
-        }
-        def branchFor(sidCol: Column): Column =
-          branches.tail.foldLeft(
-            when(sidCol === lit(branches.head._1), branches.head._2)) {
-            case (acc, (si, arm)) => acc.when(sidCol === lit(si), arm)
-          }
-        concat((1 to superProbe).map(p =>
-          branchFor(element_at(ranked, p).getField("sid"))): _*)
-      }
-    transform(slice(array_sort(union), 1, nProbe), x => x.getField("cid"))
-  }
-
-  /** [[probeCellsTwoLevel]] with the member-cell ranking as a broadcast
-    * JOIN — probe lists as DATA, for the k-regime where the literal
-    * probe expressions stop compiling (SCALE.md r13 named the cliff:
-    * past k·dim ≈ 10⁵ literal terms plan construction/compilation
-    * itself dominates — nc=640 hier measured 40.2 s, WORSE than
-    * nc=160 — and SemDeDup-production 50k cells × dim 768 ≈ 7.7×10⁷
-    * literal floats cannot build a plan at all). The
-    * [[ivfAssignTwoLevelJoin]] join-shape applied to the probe side:
-    *
-    *  - stage A ranks the ≈√k super-centroids as LITERALS — plan size
-    *    O(√k·dim) (50k cells, dim 768: √k ≈ 224 supers ≈ 1.7×10⁵ plan
-    *    floats, three orders under the literal path's 7.7×10⁷);
-    *  - stage B explodes the `superProbe` probed super ids and
-    *    broadcast-joins the (sid, cid, cvec) member TABLE — one 6-dp
-    *    cosine kernel per candidate row, the same rounded kernel
-    *    [[probeCellsTwoLevel]]'s `cellStructs` evaluates literally;
-    *  - stage C takes the `nProbe` best (d, cid) per probe with a
-    *    sort-sliced collect_list — the aggregate analogue of the
-    *    literal path's array_sort + slice. Cells are disjoint, so the
-    *    (d, cid) pairs are unique and array_sort erases the collect
-    *    order: the probed cell list is BIT-IDENTICAL to the literal
-    *    path's however tasks interleave (spec-pinned).
-    *
-    * Cost shape: n·superProbe·√k candidate rows through ONE
-    * probe-keyed exchange (map-side-combinable collect_list bounded by
-    * superProbe·(k/√k) entries per probe); k never enters the plan.
-    */
-  private def probeCellsTwoLevelJoin(
-      probes: DataFrame,
-      centroids: Seq[(Long, Seq[Float])],
-      cells: Seq[(Seq[Float], Seq[(Long, Seq[Float])])],
-      nProbe: Int,
-      superProbe: Int): DataFrame = {
-    require(superProbe >= 1, s"superProbe must be >= 1: $superProbe")
-    if (cells.size <= superProbe)
-      // probing every super IS the flat ranking — same fallback (and
-      // same literal plan, safely under the cliff) as the literal path
-      probeCellsOf(probes, centroids, nProbe)
-    else {
-      val spark = probes.sparkSession
-      import spark.implicits._
-      val memberDf = cells.zipWithIndex.flatMap { case ((_, ms), si) =>
-        ms.map { case (cid, v) => (si, cid, v) }
-      }.toDF("sid", "cid", "cvec")
-      val ranked = array_sort(array(cells.zipWithIndex.map { case ((sv, _), si) =>
-        struct((-cosine(col("embedding"), array(sv.map(lit): _*))).as("d"),
-          lit(si).as("sid"))
-      }.toIndexedSeq: _*))
-      val probeSids = array(
-        (1 to superProbe).map(p => element_at(ranked, p).getField("sid")): _*)
-      // the aggregate sees ONLY narrow (probe_id, (d, cid)) rows — the
-      // probe embedding is scored map-side in the broadcast-join stage
-      // and re-attached by an id-keyed join AFTER the per-probe slice:
-      // carrying `_pe` through the agg made ObjectHashAggregate's sort
-      // fallback sort n·superProbe·members WIDE rows (the r15 sf100
-      // rung's disk blow-up; narrow structs spill 20× smaller)
-      probes
-        .select(col("probe_id"), col("embedding").as("_pe"),
-          explode(probeSids).as("sid"))
-        .join(broadcast(memberDf), Seq("sid"))
-        .select(col("probe_id"),
-          struct(round(-cosine(col("_pe"), col("cvec")), 6).as("d"),
-            col("cid").as("cid")).as("_dc"))
-        .groupBy("probe_id")
-        .agg(slice(array_sort(collect_list(col("_dc"))), 1, nProbe)
-          .as("_cells"))
-        .join(probes.select(col("probe_id"), col("embedding").as("_pe")),
-          Seq("probe_id"))
-        .select(col("probe_id"), col("_pe"),
-          explode(transform(col("_cells"), x => x.getField("cid")))
-            .as("centroid_id"))
-    }
-  }
-
-  /** [[knnGraphHier]] with BOTH per-row stages as broadcast joins —
-    * centroids AND probe lists as DATA ([[ivfAssignTwoLevelJoin]] for
-    * the assignment, [[probeCellsTwoLevelJoin]] for the probe lists) —
-    * the graph-build path past the literal-expression cliff (SCALE.md
-    * r13; r13 verdict #2). Probed cell sets and assignments are
-    * BIT-IDENTICAL to [[knnGraphHier]]'s literal two-level path
-    * (spec-pinned), and the shared [[graphTail]] keeps edge semantics
-    * one kernel; with few enough super-cells (≤ superProbe) both
-    * stages fall back to the same flat path as [[knnGraphHier]], so
-    * the join variant degrades to [[knnGraph]] exactly.
-    */
-  def knnGraphHierJoin(
-      embeddings: DataFrame,
-      k: Int = 4,
-      nCentroids: Int = 16,
-      nProbe: Int = 4,
-      superK: Int = 0,
-      superProbe: Int = SuperProbeDefault): DataFrame = {
-    val cents = seedCentroids(embeddings, nCentroids)
-    val k0 = if (superK > 0) superK
-      else math.max(1, math.round(math.sqrt(cents.size.toDouble)).toInt)
-    knnGraphHierJoinWith(embeddings, cents, superCells(cents, k0),
-      k, nProbe, superProbe)
-  }
-
-  /** [[knnGraphHierJoin]] over PRECOMPUTED centroids + super-cells:
-    * the auto-routing [[knnGraphHier]] has already collected both, and
-    * the assignment stage shares them too — one seed collect and one
-    * driver Lloyd per graph build, never per stage (r14 review
-    * finding; the same de-duplication the r13 fix made inside the
-    * literal path).
-    */
-  private def knnGraphHierJoinWith(
-      embeddings: DataFrame,
-      cents: Seq[(Long, Seq[Float])],
-      cells: Seq[(Seq[Float], Seq[(Long, Seq[Float])])],
-      k: Int,
-      nProbe: Int,
-      superProbe: Int): DataFrame = {
-    val assigned =
-      if (cells.size <= superProbe)
-        // [[knnGraphHier]]'s fallback is the PORTABLE flat argmin (the
-        // bit-parity contract with [[knnGraph]]); mirror it exactly
-        embeddings.withColumn("centroid_id", nearestCentroidPortable(cents))
-          .select(col("centroid_id"), col("vec_id"), col("embedding"), col("label"))
-      else
-        twoLevelJoinAssignedWith(embeddings, cents, cells, superProbe,
-          carry = Seq("label"))
-          .select(col("centroid_id"), col("vec_id"), col("embedding"), col("label"))
-    val probeCells = probeCellsTwoLevelJoin(
-      embeddings.select(col("vec_id").as("probe_id"), col("embedding")),
-      cents, cells, nProbe, superProbe)
-    graphTail(assigned, probeCells, k)
-  }
-
-  /** One round of LABEL PROPAGATION over the [[knnGraph]] edge table —
-    * corpus-wide pseudo-labeling (Zhu & Ghahramani 2002, CMU-CALD-02-107;
-    * the semi-supervised step a labeled-subset corpus uses to extend
-    * labels, and a leave-one-out embedding-quality audit when every
-    * vertex is labeled): each vector takes the cosine-WEIGHTED majority
-    * label of its k graph neighbors (self excluded by the graph), ties
-    * to the smallest label. Output one row per vector:
-    * `vec_id, label, pred_label, vote_w, n_votes, agrees` — `agrees`
-    * is the per-vertex quality verdict (does the neighborhood confirm
-    * the label?).
-    *
-    * Portability: edge cosines are 6-dp, so the per-(vertex, label)
-    * vote sums are DECIMAL(16,6)-exact; the winner is an aggregate
-    * argmax (max vote join + min label at the max) — no window over
-    * the corpus, both aggregates vertex-bounded. Scale inherits
-    * [[knnGraph]]'s shuffle-join law; the vote adds two map-side-
-    * combinable aggregates keyed by vec_id.
-    */
   /** Per-vertex winning vote from a `(vec_id, pred_label, vote_w,
     * n_votes)` table in ONE map-side-combinable aggregate:
     * `max(struct(vote_w, −pred_label, n_votes))` IS the (max vote,
@@ -1021,6 +789,24 @@ object Similarity {
         coalesce(col("pred_label") === col("label"), lit(false)).as("agrees"))
       .orderBy("vec_id")
 
+  /** One round of LABEL PROPAGATION over the [[knnGraph]] edge table —
+    * corpus-wide pseudo-labeling (Zhu & Ghahramani 2002, CMU-CALD-02-107;
+    * the semi-supervised step a labeled-subset corpus uses to extend
+    * labels, and a leave-one-out embedding-quality audit when every
+    * vertex is labeled): each vector takes the cosine-WEIGHTED majority
+    * label of its k graph neighbors (self excluded by the graph), ties
+    * to the smallest label. Output one row per vector:
+    * `vec_id, label, pred_label, vote_w, n_votes, agrees` — `agrees`
+    * is the per-vertex quality verdict (does the neighborhood confirm
+    * the label?).
+    *
+    * Portability: edge cosines are 6-dp, so the per-(vertex, label)
+    * vote sums are DECIMAL(16,6)-exact; the winner is an aggregate
+    * argmax (max vote join + min label at the max) — no window over
+    * the corpus, both aggregates vertex-bounded. Scale inherits
+    * [[knnGraph]]'s shuffle-join law; the vote adds two map-side-
+    * combinable aggregates keyed by vec_id.
+    */
   def labelPropagate(
       embeddings: DataFrame,
       k: Int = 4,
@@ -1037,44 +823,13 @@ object Similarity {
     propagationOutput(embeddings, voteWinner(votes))
   }
 
-  /** One NN-DESCENT refinement round over the [[knnGraph]] edge table
-    * (Dong, Moses & Li 2011, WWW '11 — "a vector's neighbor's
-    * neighbors are likely its neighbors"): the candidate set per
-    * vertex is its current k edges UNION its neighbors-of-neighbors
-    * (two hops along the directed graph, self excluded), re-scored
-    * with the exact 6-dp cosine and cut back to top-k. Because the
-    * current edges are IN the candidate set and the rank keeps the
-    * best k of a superset, per-vertex recall vs the exact graph is
-    * MONOTONE non-decreasing (spec-gated: measured recall strictly
-    * improves on the near-isotropic fixture, where the IVF graph's
-    * cell approximation leaves the most room). The full NN-Descent
-    * algorithm iterates exactly this step to convergence.
-    *
-    * Scale: |edges| = n·k, the two-hop self-join emits ≤ n·k² rows
-    * (k is small by construction), two id-keyed embedding joins fetch
-    * the vector pairs, and the per-vertex top-k window is the graph
-    * family's usual per-probe state — no corpus-quadratic term, no
-    * new shuffle class.
-    */
-  def knnGraphRefine(
-      embeddings: DataFrame,
-      k: Int = 4,
-      nCentroids: Int = 16,
-      nProbe: Int = 4): DataFrame = {
-    val g = graft.core.CacheScope.persist(
-      knnGraph(embeddings, k, nCentroids, nProbe)
-        .select(col("probe_id"), col("vec_id")))
-    refineRound(embeddings, g, k)
-      .orderBy(col("probe_id"), col("cosine").desc, col("vec_id"))
-  }
-
   /** ONE NN-Descent round over an id-only edge frame `g(probe_id,
     * vec_id)`: candidates = current edges ∪ neighbors-of-neighbors
     * (two-hop self-join, self excluded), exact 6-dp re-score through
     * the two id-keyed embedding joins, per-vertex top-k. The shared
-    * kernel under [[knnGraphRefine]] (one round) and
-    * [[knnGraphRefineIter]] (fixed depth), so the candidate and
-    * ranking semantics can never drift between them.
+    * kernel under [[knnGraphRefineIter]] (fixed depth) and
+    * [[knnGraphRefineConverged]], so the candidate and ranking
+    * semantics can never drift between them.
     */
   private def refineRound(
       embeddings: DataFrame, g: DataFrame, k: Int): DataFrame = {
@@ -1097,19 +852,28 @@ object Similarity {
       .drop("_rn")
   }
 
-  /** NN-Descent run to FIXED DEPTH (Dong et al. 2011's iteration, the
-    * [[labelPropagateIter]] recipe applied to graph refinement): the
-    * approximate graph is built once, then each round expands
-    * candidates two hops over the PREVIOUS round's edges and re-scores
-    * exactly. Per-vertex recall vs the exact graph is MONOTONE
-    * non-decreasing round over round (each round's candidate set
-    * contains the previous round's surviving edges), so extra rounds
-    * can only help — the classic trade is rounds × (≤ n·k² candidate
-    * rows + two id-keyed embedding joins + the per-vertex rank
-    * window), no corpus-quadratic term at any depth. Each round's
-    * id-frame is persisted: round r's plan is one two-hop join deep,
-    * never a growing lineage. rounds=1 is [[knnGraphRefine]] exactly
-    * (spec-pinned bit-identical).
+  /** NN-DESCENT refinement of the [[knnGraph]] edge table (Dong, Moses
+    * & Li 2011, WWW '11 — "a vector's neighbor's neighbors are likely
+    * its neighbors") run to FIXED DEPTH (the [[labelPropagateIter]]
+    * recipe applied to graph refinement): the approximate graph is
+    * built once, then each round's candidate set per vertex is its
+    * PREVIOUS round's k edges UNION their neighbors-of-neighbors (two
+    * hops along the directed graph, self excluded), re-scored with the
+    * exact 6-dp cosine and cut back to top-k. Because the current edges
+    * are IN the candidate set and the rank keeps the best k of a
+    * superset, per-vertex recall vs the exact graph is MONOTONE
+    * non-decreasing round over round (spec-gated: one round measurably
+    * improves recall on the near-isotropic fixture, where the IVF
+    * graph's cell approximation leaves the most room), so extra rounds
+    * can only help. `rounds = 1` is the single refinement round the
+    * `knn_graph_refine_embeddings` key declares.
+    *
+    * Scale per round: |edges| = n·k, the two-hop self-join emits
+    * ≤ n·k² rows (k is small by construction), two id-keyed embedding
+    * joins fetch the vector pairs, and the per-vertex top-k window is
+    * the graph family's usual per-probe state — no corpus-quadratic
+    * term at any depth. Each round's id-frame is persisted: round r's
+    * plan is one two-hop join deep, never a growing lineage.
     */
   def knnGraphRefineIter(
       embeddings: DataFrame,
@@ -1359,38 +1123,43 @@ object Similarity {
       newcomerEdges: DataFrame, // the batch vertices' own edges
       batchAssigned: DataFrame) // (centroid_id, vec_id, embedding, label)
 
-  /** The assignment + probe-cell kernels the append family runs,
-    * ROUTED past the literal-plan cliff exactly like the graph
-    * builders (r17 — the production-nc append): under the
-    * [[GraphLiteralMaxTerms]] budget, the PORTABLE literal kernels the
-    * declared keys freeze (oracle-checkable 6-dp argmin); above it,
-    * the two-level broadcast-join kernels over the same FROZEN
-    * centroid matrix ([[twoLevelJoinAssignedWith]] /
-    * [[probeCellsTwoLevelJoin]], super-cells derived deterministically
-    * from the centroids alone) — both are per-row deterministic
-    * functions of (embedding, centroid matrix), so append ≡ rebuild
-    * still holds, now against [[knnGraphHierJoin]] at the same nc: the
-    * production build path whose layouts a production append
-    * maintains (spec-pinned).
+  /** The assignment + probe-cell kernels the append family runs —
+    * and the HNSW layer builds ([[layerGraph]]), so every layer is
+    * built with the kernels that later maintain it — ROUTED past the
+    * literal-plan cliff by the one [[literalFits]] predicate: under
+    * the budget, the PORTABLE flat literal kernels the declared keys
+    * freeze (oracle-checkable 6-dp argmin, [[knnGraph]]'s); above it,
+    * the two-level broadcast-join kernels of a [[TwoLevel]] assigner
+    * over the same FROZEN centroid matrix (super-cells derived
+    * deterministically from the centroids alone, [[knnGraphHier]]'s
+    * route there). Both are per-row deterministic functions of
+    * (embedding, centroid matrix), so append ≡ rebuild holds at any
+    * nc (spec-pinned on both sides of the cliff).
     */
   private def appendKernels(
       centroids: Seq[(Long, Seq[Float])],
       nProbe: Int): (DataFrame => DataFrame, DataFrame => DataFrame) = {
-    val dim = centroids.headOption.map(_._2.length).getOrElse(0)
-    if (centroids.isEmpty ||
-        SuperProbeDefault.toLong * centroids.size * dim <= GraphLiteralMaxTerms)
-      (df => ivfAssignPortableTo(df, centroids)
-         .select(col("centroid_id"), col("vec_id"), col("embedding"), col("label")),
-       df => probeCellsOf(df, centroids, nProbe))
-    else {
-      val k0 = math.max(1, math.round(math.sqrt(centroids.size.toDouble)).toInt)
-      val cells = superCells(centroids, k0)
-      (df => twoLevelJoinAssignedWith(df, centroids, cells, SuperProbeDefault,
-           carry = Seq("label"))
-         .select(col("centroid_id"), col("vec_id"), col("embedding"), col("label")),
-       df => probeCellsTwoLevelJoin(df, centroids, cells, nProbe,
-         SuperProbeDefault))
-    }
+    val (assign, probeCells): (DataFrame => DataFrame, DataFrame => DataFrame) =
+      if (literalFits(centroids))
+        (ivfAssignPortableTo(_, centroids), probeCellsOf(_, centroids, nProbe))
+      else {
+        val tl = new TwoLevel(centroids, portableFlat = true)
+        (tl.assign(_, Seq("label")), tl.probeCells(_, nProbe))
+      }
+    (df => assign(df)
+       .select(col("centroid_id"), col("vec_id"), col("embedding"), col("label")),
+     probeCells)
+  }
+
+  /** One HNSW layer's kNN graph at `nc` cells over [[appendKernels]]
+    * — [[knnGraph]] under the literal budget, [[knnGraphHier]]'s join
+    * route past it — so append ≡ rebuild holds on every layer, whatever
+    * its nc.
+    */
+  private def layerGraph(sub: DataFrame, k: Int, nc: Int): DataFrame = {
+    val (assign, probeCells) = appendKernels(seedCentroids(sub, nc), 4)
+    graphTail(assign(sub),
+      probeCells(sub.select(col("vec_id").as("probe_id"), col("embedding"))), k)
   }
 
   private def appendEdgePieces(
@@ -1940,21 +1709,17 @@ object Similarity {
       levels: Int = 2,
       ratio: Int = 4,
       k: Int = 4,
-      nCentroidsOf: Option[Long => Int] = None,
-      hier: Boolean = false): Seq[DataFrame] = {
+      nCentroidsOf: Option[Long => Int] = None): Seq[DataFrame] = {
     require(levels >= 1, s"levels must be >= 1: $levels")
     require(ratio >= 2, s"ratio must be >= 2: $ratio")
     // the per-layer graph builder: the declared key keeps the
     // oracle-checkable flat kernel at nc=16; at corpus scale pass
     // `nCentroidsOf = Some(n => n/cellSize)` (the SemDeDup nc ∝ corpus
     // law — fixed nc makes the flat kernel's candidate mass quadratic
-    // per decade) and `hier = true` to route through the two-level
-    // join kernel past the literal-plan cliff, exactly as knn-graph
-    // builds do (SCALE.md r15)
-    def build(sub: DataFrame): DataFrame = {
-      val nc = nCentroidsOf.map(f => f(sub.count())).getOrElse(16)
-      if (hier) knnGraphHierJoin(sub, k, nc) else knnGraph(sub, k, nc)
-    }
+    // per decade), and a layer past the literal-plan cliff builds on
+    // the two-level join kernels its appends run (SCALE.md r15)
+    def build(sub: DataFrame): DataFrame =
+      layerGraph(sub, k, nCentroidsOf.map(f => f(sub.count())).getOrElse(16))
     build(embeddings) +: (1 to levels).map { l =>
       val sub = embeddings.filter(hnswLayerPredicate(l, ratio))
       // loud degenerate-corpus guard (r16 advice): a corpus too small
@@ -2110,7 +1875,6 @@ object Similarity {
       ratio: Int = 4,
       k: Int = 4,
       nCentroidsOf: Option[Long => Int] = None,
-      hier: Boolean = false,
       nCentroids: Int = 16): Unit = {
     require(levels >= 1, s"levels must be >= 1: $levels")
     require(ratio >= 2, s"ratio must be >= 2: $ratio")
@@ -2126,19 +1890,18 @@ object Similarity {
     // through the two-level join kernels ([[appendKernels]]), and the
     // landmark STAR stays at 16 seeds regardless (≤16 extra edges per
     // vertex is the hierarchy's design constant, not a layout knob).
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.Await
     import scala.concurrent.ExecutionContext.Implicits.global
-    val baseF = Future {
+    val baseF = budgetedFuture {
       val nc0 = nCentroidsOf.map(f => f(embeddings.count()))
         .getOrElse(nCentroids)
-      val g = if (hier) knnGraphHierJoin(embeddings, k, nc0)
-        else knnGraph(embeddings, k, nc0)
+      val g = layerGraph(embeddings, k, nc0)
       val cents = seedCentroids(embeddings, nCentroids)
       writeGraphClustered(g,
         appendKernels(cents, 4)._1(embeddings), s"$path/l0")
     }
     val upperF = (1 to levels).map { l =>
-      Future {
+      budgetedFuture {
         val sub = embeddings.filter(hnswLayerPredicate(l, ratio))
         // one driver job: the emptiness guard, the layer minimum, and
         // the layer size together
@@ -2148,8 +1911,7 @@ object Similarity {
             "vertices - the corpus is too small for this hierarchy; " +
             "lower `levels`")
         val nc = nCentroidsOf.map(f => f(mc.getLong(1))).getOrElse(16)
-        val g = if (hier) knnGraphHierJoin(sub, k, nc)
-          else knnGraph(sub, k, nc)
+        val g = layerGraph(sub, k, nc)
         val starCents = seedCentroids(sub, 16)
         val layoutCents =
           if (nc <= 16) starCents else seedCentroids(sub, nc)
@@ -2269,14 +2031,14 @@ object Similarity {
       else None
     // per-layer folds touch DISJOINT artifacts (l0, l<j>/knn, l<j>/star)
     // over immutable inputs — run them concurrently, like the build
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.Await
     import scala.concurrent.ExecutionContext.Implicits.global
-    val baseF = Future {
+    val baseF = budgetedFuture {
       0 -> appendToGraphClustered(spark, s"$path/l0", base, batch,
         centroids, k, nProbe)
     }
     val upperF = (1 to levels).map { l =>
-      Future {
+      budgetedFuture {
         val subBase = base.filter(hnswLayerPredicate(l, ratio))
         val subBatch = batch.filter(hnswLayerPredicate(l, ratio))
         // one driver job: emptiness AND the arriving minimum together
@@ -2477,17 +2239,11 @@ object Similarity {
       probes: DataFrame,
       centroids: Seq[(Long, Seq[Float])],
       nProbe: Int,
-      carry: Seq[String] = Nil): DataFrame = {
-    val scored = array(centroids.map { case (cid, v) =>
-      val cvec = array(v.map(lit): _*)
-      struct(round(-cosine(col("embedding"), cvec), 6).as("d"),
-        lit(cid).as("cid"))
-    }.toIndexedSeq: _*)
+      carry: Seq[String] = Nil): DataFrame =
     probes.select(
       col("probe_id") +: col("embedding").as("_pe") +: carry.map(col) :+
-        explode(transform(slice(array_sort(scored), 1, nProbe),
+        explode(transform(slice(array_sort(cellStructs(centroids)), 1, nProbe),
           x => x.getField("cid"))).as("centroid_id"): _*)
-  }
 
   /** Hard-NEGATIVE mining — the contrastive-training data-prep step of
     * the dense-retriever lineage (DPR, Karpukhin et al. 2020,
@@ -2656,28 +2412,6 @@ object Similarity {
       .orderBy("probe_id")
   }
 
-  /** Per-vector int8 (0–255) min–max quantization — the storage path
-    * for vector corpora at scale (4× smaller than float32 before
-    * compression; IVF/LSH recall is barely affected at 8 bits). Pure
-    * narrow projection; `floor` (not `round`) keeps the binning
-    * bit-identical across engines, and the vector is serialized to CSV
-    * for the driver's hash compare. Constant vectors quantize to 0s.
-    */
-  /** Per-label centroid, one row per (label, dimension): the class-mean
-    * step behind k-NN classifiers, cluster seeding, and per-source
-    * embedding drift monitoring. Output is kept EXPLODED (label,
-    * dim_idx, centroid) rather than re-assembled into arrays — the
-    * flat shape is oracle-comparable and join-ready.
-    *
-    * Plan: posexplode (narrow, ×dim) then one hash aggregate on
-    * (label, dim_idx). Partial aggregation collapses every map
-    * partition to ≤ |labels|·dim rows before the exchange, so the
-    * shuffle volume is O(partitions · labels · dim) — independent of
-    * row count; at 100 TB this is the cheapest possible reduction
-    * shape (no window, no sort, no driver collect). Means are
-    * accumulated in double and rounded to 6 dp, the engine-portability
-    * convention the similarity family already uses.
-    */
   /** Cross-modal enrichment: each document joined to its embedding row
     * (`doc_id = vec_id`), carrying the text-side quality score and the
     * vector-side L2 norm + label — the retrieval-augmented curation
@@ -2699,6 +2433,21 @@ object Similarity {
       .select("doc_id", "lang", "label", "quality_score", "vec_norm")
       .orderBy("doc_id")
 
+  /** Per-label centroid, one row per (label, dimension): the class-mean
+    * step behind k-NN classifiers, cluster seeding, and per-source
+    * embedding drift monitoring. Output is kept EXPLODED (label,
+    * dim_idx, centroid) rather than re-assembled into arrays — the
+    * flat shape is oracle-comparable and join-ready.
+    *
+    * Plan: posexplode (narrow, ×dim) then one hash aggregate on
+    * (label, dim_idx). Partial aggregation collapses every map
+    * partition to ≤ |labels|·dim rows before the exchange, so the
+    * shuffle volume is O(partitions · labels · dim) — independent of
+    * row count; at 100 TB this is the cheapest possible reduction
+    * shape (no window, no sort, no driver collect). Means are
+    * accumulated in double and rounded to 6 dp, the engine-portability
+    * convention the similarity family already uses.
+    */
   def labelCentroids(embeddings: DataFrame): DataFrame =
     embeddings
       .select(col("label"), posexplode(col("embedding")).as(Seq("dim_idx", "v")))
@@ -2707,6 +2456,13 @@ object Similarity {
         count(lit(1)).as("n_vectors"))
       .orderBy("label", "dim_idx")
 
+  /** Per-vector int8 (0–255) min–max quantization — the storage path
+    * for vector corpora at scale (4× smaller than float32 before
+    * compression; IVF/LSH recall is barely affected at 8 bits). Pure
+    * narrow projection; `floor` (not `round`) keeps the binning
+    * bit-identical across engines, and the vector is serialized to CSV
+    * for the driver's hash compare. Constant vectors quantize to 0s.
+    */
   def quantizeInt8(embeddings: DataFrame): DataFrame = {
     val mn = array_min(col("embedding")).cast("double")
     val mx = array_max(col("embedding")).cast("double")
@@ -3260,191 +3016,218 @@ object Similarity {
     */
   val SuperProbeDefault = 2
 
-  /** TWO-LEVEL nearest-centroid assignment: rank ≈√k super-centroids,
-    * then exact argmin WITHIN the `superProbe` best super-cells' member
-    * centroids (min-merge of the per-cell argmin structs) — per-row
-    * kernel count drops from k to ≈(1+2·superProbe)·√k (k=512,
-    * probe=2: 512 → ~115 cosine kernels/row), which is what keeps
-    * assignment sub-linear when nCentroids scales ∝ corpus (the
-    * SemDeDup operating law — SCALE.md).
-    *
-    * The assignment is the standard coarse-quantizer approximation: a
-    * vector whose true centroid hides in an unprobed cell lands with a
-    * neighbor; SemDeDup's within-cluster pair search tolerates exactly
-    * this class of error (Abbas et al. 2023 §3 run their clustering
-    * approximately too). The declared oracle-checked keys stay on the
-    * flat portable argmin.
-    *
-    * Plan shape: ONE narrow projection — the ranked super array is a
-    * common subexpression of the probe branches (evaluated once per row
-    * under whole-stage codegen), and each probe's CASE chain evaluates
-    * ONLY the branch its super id selects. Plan SIZE is
-    * O(superProbe·k·dim) literals (each member kernel appears once per
-    * probe chain) — the same order the flat argmin already carries.
-    * `superK = 0` → ⌈√k⌉.
+  /** Literal-expression budget for the two-level kernels
+    * (superProbe·nCentroids·dim floats in the CASE chains):
+    * nc=640/dim=64/superProbe=2 sits at ~82k terms and measured
+    * 19.6 s literal vs 1.26 s as data (SCALE.md r14) — compilation
+    * dominates well before the plan stops building. Every two-level
+    * operator routes to its broadcast-join kernels above this budget
+    * ([[literalFits]]); the routes are spec-pinned bit-identical, so
+    * the switch is purely physical (nc=160 at ~20k terms stays
+    * literal, where literals win).
     */
-  def nearestCentroidTwoLevel(
+  val GraphLiteralMaxTerms: Long = 50000L
+
+  private val literalBudget =
+    ThreadLocal.withInitial[java.lang.Long](() => GraphLiteralMaxTerms)
+
+  /** Run `body` with this thread's literal budget at `terms` — the spec
+    * seam for the routing below: `terms = 0` forces every two-level
+    * operator onto its broadcast-join route (the concurrent HNSW layer
+    * builds and appends carry it onto their pool threads).
+    */
+  private[graft] def withLiteralBudget[T](terms: Long)(body: => T): T = {
+    val prev = literalBudget.get
+    literalBudget.set(terms)
+    try body finally literalBudget.set(prev)
+  }
+
+  /** A `Future` running `body` under the CALLING thread's literal
+    * budget — pool threads would otherwise route on the default one,
+    * so a concurrent build and its appends could take different routes.
+    */
+  private def budgetedFuture[T](body: => T)(
+      implicit ec: scala.concurrent.ExecutionContext): scala.concurrent.Future[T] = {
+    val terms: Long = literalBudget.get
+    scala.concurrent.Future(withLiteralBudget(terms)(body))
+  }
+
+  /** THE literal-vs-join routing predicate: do `superProbe` literal
+    * CASE chains over `centroids` (superProbe·k·dim floats) fit the
+    * budget? [[TwoLevel]] routes on it, and so do the graph append
+    * kernels and HNSW layer builds ([[appendKernels]]).
+    */
+  private[graft] def literalFits(
+      centroids: Seq[(Long, Seq[Float])],
+      superProbe: Int = SuperProbeDefault): Boolean =
+    superProbe.toLong * centroids.size *
+      centroids.headOption.fold(0)(_._2.length) <= literalBudget.get
+
+  /** The TWO-LEVEL assigner over one centroid set, built once per
+    * operator: it derives the ≈√k super-cells ([[superCells]];
+    * `superK = 0` → round(√k)) and the literal-vs-join route
+    * ([[literalFits]]) once, and serves both per-row stages from them.
+    *
+    *  - [[assign]]: rank the super-centroids, then exact argmin WITHIN
+    *    the `superProbe` best super-cells' members — per-row kernel
+    *    count drops from k to ≈(1+2·superProbe)·√k (k=512, probe=2:
+    *    512 → ~115 cosine kernels/row), which keeps assignment
+    *    sub-linear when nCentroids scales ∝ corpus (the SemDeDup law —
+    *    SCALE.md). It is the standard coarse-quantizer approximation: a
+    *    vector whose true centroid hides in an unprobed cell lands with
+    *    a neighbor, which SemDeDup's within-cluster pair search
+    *    tolerates (Abbas et al. 2023 §3 cluster approximately too); the
+    *    declared oracle-checked keys stay on the flat portable argmin.
+    *  - [[probeCells]]: the per-probe analogue of [[probeCellsOf]] —
+    *    the `nProbe` best cells (6-dp cosine desc, cid asc) among the
+    *    probed supers' members.
+    *
+    * LITERAL route (under the budget): one narrow projection. The
+    * ranked super array is a common subexpression of the probe
+    * branches, and each probe's CASE chain evaluates only the branch
+    * its super id selects; plan size is O(superProbe·k·dim) literals.
+    * JOIN route (past it — SemDeDup's 50k cells × dim 768 ≈ 7.7×10⁷
+    * literal floats cannot build a plan at all): the supers still rank
+    * as literals (O(√k·dim)), the probed super ids explode and
+    * broadcast-join the (sid, cid, cvec) member TABLE, one cosine
+    * kernel per candidate row, and one per-row aggregate keeps the
+    * argmin / the `nProbe` best — k never enters the plan. Below the
+    * budget the literal route is the faster evaluation (k=1600: 21 s
+    * vs 49 s per corpus pass, SCALE.md r11 — the join pays
+    * n·superProbe·√k row expansion); past it the join wins (nc=640
+    * graph: 19.6 s vs 1.26 s, r14).
+    *
+    * The routes are BIT-IDENTICAL (spec-pinned): the same centroid
+    * floats flow through the same [[cosine]] kernel, `min(struct(d,
+    * cid))` is the (d asc, cid asc) argmin `array_min` applies, and
+    * cells are disjoint, so the (d, cid) pairs are unique and
+    * array_sort erases the aggregate's collect order. With few enough
+    * super-cells (≤ superProbe) both stages ARE the flat ranking;
+    * `portableFlat` picks the flat argmin a caller family is pinned to
+    * — the 6-dp portable one for the graph family (bit parity with
+    * [[knnGraph]]), the unrounded one for the assignment family.
+    */
+  private final class TwoLevel(
       centroids: Seq[(Long, Seq[Float])],
       superK: Int = 0,
-      superProbe: Int = SuperProbeDefault): Column = {
+      superProbe: Int = SuperProbeDefault,
+      portableFlat: Boolean = false) {
     require(superProbe >= 1, s"superProbe must be >= 1: $superProbe")
-    val k0 = if (superK > 0) superK else math.max(1, math.round(math.sqrt(centroids.size.toDouble)).toInt)
-    val cells = superCells(centroids, k0)
-    // probing every cell IS the flat argmin — skip the detour
-    if (cells.size <= superProbe) nearestCentroid(centroids)
-    else {
+    val literal: Boolean = literalFits(centroids, superProbe)
+    private lazy val cells = superCells(centroids,
+      if (superK > 0) superK
+      else math.max(1, math.round(math.sqrt(centroids.size.toDouble)).toInt))
+    // probing every super-cell IS the flat ranking — skip the detour
+    private lazy val flat = cells.size <= superProbe
+
+    /** The `superProbe` best super ids of each row's `embedding`. */
+    private def probedSids: Seq[Column] = {
       val ranked = array_sort(array(cells.zipWithIndex.map { case ((sv, _), si) =>
         struct((-cosine(col("embedding"), array(sv.map(lit): _*))).as("d"),
           lit(si).as("sid"))
       }.toIndexedSeq: _*))
-      val branches = cells.zipWithIndex.map { case ((_, members), si) =>
-        si -> nearestCentroidStruct(members)
-      }
-      def branchFor(sidCol: Column): Column =
-        branches.tail.foldLeft(
-          when(sidCol === lit(branches.head._1), branches.head._2)) {
-          case (acc, (si, arm)) => acc.when(sidCol === lit(si), arm)
-        }
-      val probed = (1 to superProbe).map(p =>
-        branchFor(element_at(ranked, p).getField("sid")))
-      array_min(array(probed: _*)).getField("cid")
+      (1 to superProbe).map(p => element_at(ranked, p).getField("sid"))
     }
+
+    /** Literal route: per probed super, a CASE chain selecting that
+      * super's `arm` over its member centroids.
+      */
+    private def probedArms(arm: Seq[(Long, Seq[Float])] => Column): Seq[Column] = {
+      val branches = cells.map(c => arm(c._2)).zipWithIndex
+      probedSids.map { sid =>
+        branches.tail.foldLeft(when(sid === lit(0), branches.head._1)) {
+          case (acc, (a, si)) => acc.when(sid === lit(si), a)
+        }
+      }
+    }
+
+    /** Join route: each row of `df` (`id`, embedding as `vec`) once per
+      * probed super, joined to the broadcast member table.
+      */
+    private def supersJoined(df: DataFrame, id: String, vec: String): DataFrame = {
+      val spark = df.sparkSession
+      import spark.implicits._
+      val members = cells.zipWithIndex.flatMap { case ((_, ms), si) =>
+        ms.map { case (cid, v) => (si, cid, v) }
+      }.toDF("sid", "cid", "cvec")
+      df.select(col(id), col("embedding").as(vec),
+          explode(array(probedSids: _*)).as("sid"))
+        .join(broadcast(members), Seq("sid"))
+    }
+
+    /** `df` (vec_id, embedding, `carry`…) → `vec_id, embedding,
+      * centroid_id, carry…`.
+      */
+    def assign(df: DataFrame, carry: Seq[String]): DataFrame = {
+      val extra = carry.filterNot(_ == "embedding").map(col)
+      def withArgmin(argmin: Column): DataFrame = df.withColumn("centroid_id", argmin)
+        .select(col("vec_id") +: col("embedding") +: col("centroid_id") +: extra: _*)
+      if (flat)
+        withArgmin(
+          if (portableFlat) nearestCentroidPortable(centroids) else nearestCentroid(centroids))
+      else if (literal)
+        withArgmin(array_min(array(probedArms(nearestCentroidStruct): _*)).getField("cid"))
+      else
+        // the argmin aggregate sees ONLY narrow (vec_id, (d, cid)) rows:
+        // the embedding is consumed map-side by the candidate kernel and
+        // re-attached with an id-keyed join after — first(embedding) in
+        // the agg buffer pushed the whole candidate expansion (embedding
+        // per row) through ObjectHashAggregate's sort fallback (the r15
+        // sf100 rung's disk blow-up)
+        supersJoined(df, "vec_id", "embedding")
+          .select(col("vec_id"), struct((-cosine(col("embedding"), col("cvec"))).as("d"),
+            col("cid").as("cid")).as("_c"))
+          .groupBy("vec_id")
+          .agg(min(col("_c")).as("_s"))
+          .join(df.select(col("vec_id") +: col("embedding") +: extra: _*), Seq("vec_id"))
+          .select(col("vec_id") +: col("embedding") +:
+            col("_s").getField("cid").as("centroid_id") +: extra: _*)
+    }
+
+    /** Probe rows (probe_id, embedding) → one `probe_id, _pe,
+      * centroid_id` row per probed cell.
+      */
+    def probeCells(probes: DataFrame, nProbe: Int): DataFrame =
+      if (flat) probeCellsOf(probes, centroids, nProbe)
+      else if (literal)
+        probes.select(col("probe_id"), col("embedding").as("_pe"),
+          explode(transform(
+            slice(array_sort(concat(probedArms(cellStructs): _*)), 1, nProbe),
+            x => x.getField("cid"))).as("centroid_id"))
+      else
+        // the top-nProbe aggregate sees ONLY narrow (probe_id, (d, cid))
+        // rows and `_pe` is re-attached by an id-keyed join after the
+        // slice: carrying it through the agg made ObjectHashAggregate's
+        // sort fallback sort n·superProbe·members WIDE rows (the r15
+        // sf100 rung's disk blow-up; narrow structs spill 20× smaller)
+        supersJoined(probes, "probe_id", "_pe")
+          .select(col("probe_id"),
+            struct(round(-cosine(col("_pe"), col("cvec")), 6).as("d"),
+              col("cid").as("cid")).as("_dc"))
+          .groupBy("probe_id")
+          .agg(slice(array_sort(collect_list(col("_dc"))), 1, nProbe).as("_cells"))
+          .join(probes.select(col("probe_id"), col("embedding").as("_pe")),
+            Seq("probe_id"))
+          .select(col("probe_id"), col("_pe"),
+            explode(transform(col("_cells"), x => x.getField("cid")))
+              .as("centroid_id"))
   }
 
-  /** [[ivfAssignTo]] with the two-level argmin — the production
-    * assignment path for corpus-scaled nCentroids.
+  /** [[ivfAssignTo]] with the two-level argmin ([[TwoLevel]], routed
+    * past the literal budget) — the production assignment path for
+    * corpus-scaled nCentroids.
     */
   def ivfAssignTwoLevelTo(
       embeddings: DataFrame,
       centroids: Seq[(Long, Seq[Float])],
       superK: Int = 0): DataFrame =
-    embeddings
-      .withColumn("centroid_id", nearestCentroidTwoLevel(centroids, superK))
+    new TwoLevel(centroids, superK).assign(embeddings, Seq("label"))
       .select("vec_id", "embedding", "label", "centroid_id")
-
-  /** Index build with BOTH phases hierarchical ([[kMeansCentroidsFast]]):
-    * the 100 TB SemDeDup build path when nCentroids ∝ corpus.
-    */
-  def buildIvfIndexFast(
-      embeddings: DataFrame,
-      nCentroids: Int,
-      iterations: Int = 3,
-      superK: Int = 0): IvfIndex =
-    IvfIndex(kMeansCentroidsFast(embeddings, nCentroids, iterations, superK))
-
-  // ------------------------- assignment as DATA (the k ≫ 10³ path)
-
-  /** Two-level assignment with the LEAF argmin as a broadcast JOIN
-    * instead of a literal CASE chain — centroids as DATA, for the
-    * k-regime where the literal plan cannot be built at all.
-    *
-    * When to use which (measured, SCALE.md round-11): at k = 1600
-    * (sf10, k ∝ n) the literal [[nearestCentroidTwoLevel]] stays the
-    * faster evaluation — 21 s vs 49 s per full-corpus pass — because
-    * the join pays n·superProbe·√k ROW expansion (each candidate row
-    * materializes through the join and argmin aggregate, dragging the
-    * embedding along) where the literal path evaluates the same kernel
-    * count with zero row growth. The join variant exists for the
-    * regime the literal plan cannot reach: plan SIZE is
-    * O(superProbe·k·dim) literal nodes, and somewhere past
-    * k·dim ≈ 10⁵ terms plan construction/compilation itself becomes
-    * the bottleneck (SemDeDup's 50k clusters × dim 768 is far past
-    * it). Here the plan is O(√k·dim): stage A ranks the ≈√k
-    * super-centroids as literals, stage B explodes the `superProbe`
-    * probed super ids and broadcast-joins the (sid, cid, cvec) member
-    * TABLE — one cosine kernel per candidate row, map-side-combined
-    * `min(struct(d, cid))` argmin, ONE n-row exchange; k never enters
-    * the plan.
-    *
-    * EXACT agreement with the literal path (spec-pinned): identical
-    * centroid floats flow through the same [[cosine]] kernel, and
-    * `min(struct(d, cid))` is the same (d asc, cid asc) argmin
-    * `array_min` applies — the aggregation is order-free, so the
-    * assignment is bit-stable however tasks interleave.
-    */
-  def ivfAssignTwoLevelJoin(
-      embeddings: DataFrame,
-      centroids: Seq[(Long, Seq[Float])],
-      superK: Int = 0,
-      superProbe: Int = SuperProbeDefault): DataFrame =
-    twoLevelJoinAssigned(embeddings, centroids, superK, superProbe,
-      carry = Seq("label"))
-      .select("vec_id", "embedding", "label", "centroid_id")
-
-  /** Shared join-assignment kernel: `df` must carry `vec_id` and
-    * `embedding`; `carry` lists further columns to pass through the
-    * per-vector argmin aggregate (constant within a vec_id group).
-    */
-  private def twoLevelJoinAssigned(
-      df: DataFrame,
-      centroids: Seq[(Long, Seq[Float])],
-      superK: Int,
-      superProbe: Int,
-      carry: Seq[String]): DataFrame = {
-    val k0 =
-      if (superK > 0) superK
-      else math.max(1, math.round(math.sqrt(centroids.size.toDouble)).toInt)
-    twoLevelJoinAssignedWith(df, centroids, superCells(centroids, k0),
-      superProbe, carry)
-  }
-
-  /** [[twoLevelJoinAssigned]] over a PRECOMPUTED super-cell partition —
-    * so a caller that already ran [[superCells]] (the graph builders
-    * share it with the probe lists) never pays the k-point driver
-    * Lloyd twice (r14 review finding).
-    */
-  private def twoLevelJoinAssignedWith(
-      df: DataFrame,
-      centroids: Seq[(Long, Seq[Float])],
-      cells: Seq[(Seq[Float], Seq[(Long, Seq[Float])])],
-      superProbe: Int,
-      carry: Seq[String]): DataFrame = {
-    require(superProbe >= 1, s"superProbe must be >= 1: $superProbe")
-    val extra = carry.filterNot(_ == "embedding")
-    if (cells.size <= superProbe)
-      // probing every cell IS the flat argmin — and at this size the
-      // literal plan sits safely under the codegen cliff
-      df.withColumn("centroid_id", nearestCentroid(centroids))
-        .select(col("vec_id") +: col("embedding") +: col("centroid_id") +:
-          extra.map(col): _*)
-    else {
-      val spark = df.sparkSession
-      import spark.implicits._
-      val memberDf = cells.zipWithIndex.flatMap { case ((_, ms), si) =>
-        ms.map { case (cid, v) => (si, cid, v) }
-      }.toDF("sid", "cid", "cvec")
-      val ranked = array_sort(array(cells.zipWithIndex.map { case ((sv, _), si) =>
-        struct((-cosine(col("embedding"), array(sv.map(lit): _*))).as("d"),
-          lit(si).as("sid"))
-      }.toIndexedSeq: _*))
-      val probeSids = array(
-        (1 to superProbe).map(p => element_at(ranked, p).getField("sid")): _*)
-      val candidate = struct(
-        (-cosine(col("embedding"), col("cvec"))).as("d"), col("cid").as("cid"))
-      // the argmin aggregate sees ONLY narrow (vec_id, (d, cid)) rows:
-      // the embedding is consumed map-side by the candidate kernel and
-      // re-attached with an id-keyed join after — first(embedding) in
-      // the agg buffer pushed the whole candidate expansion (embedding
-      // per row) through ObjectHashAggregate's sort fallback (the r15
-      // sf100 rung's disk blow-up)
-      df.select(col("vec_id"), col("embedding"), explode(probeSids).as("sid"))
-        .join(broadcast(memberDf), Seq("sid"))
-        .select(col("vec_id"), candidate.as("_c"))
-        .groupBy("vec_id")
-        .agg(min(col("_c")).as("_s"))
-        .join(df.select(col("vec_id") +: col("embedding") +:
-          extra.map(col): _*), Seq("vec_id"))
-        .select(col("vec_id") +: col("embedding") +:
-          col("_s").getField("cid").as("centroid_id") +: extra.map(col): _*)
-    }
-  }
 
   /** SemDeDup's own training recipe (Abbas et al. 2023 cluster on a
     * subset/approximately): Lloyd over a DETERMINISTIC hash-addressed
     * sample of ≈ nCentroids·samplePerCell vectors, assigned with the
-    * literal two-level argmin ([[kMeansCentroidsFast]]'s loop — the
-    * faster evaluation at practical k; see [[ivfAssignTwoLevelJoin]]
-    * for the k-regime where literals stop being buildable). With
+    * routed two-level argmin ([[kMeansCentroidsFast]]'s loop). With
     * k ∝ n the full-corpus train pass is O(n·√k) per iteration — the
     * measured n^1.5 law (SCALE.md round-11); sampling caps the rows at
     * samplePerCell per cell, so training is O(k·samplePerCell·√k)
@@ -3532,53 +3315,20 @@ object Similarity {
     * would dominate the whole operator (SCALE.md r9 measured it at
     * k=512). Pair semantics within a cell are identical (same 6-dp
     * cosine, same keep-lowest-id ordering); only the cell boundaries
-    * differ by the coarse-quantizer approximation.
+    * differ by the coarse-quantizer approximation. Past the literal
+    * budget the assignment routes to the bit-equal broadcast-join
+    * kernel ([[ivfAssignTwoLevelTo]]).
     */
   def semanticPairsHier(
       embeddings: DataFrame,
       index: IvfIndex,
       minCos: Double = SemDedupMinCos,
       superK: Int = 0): DataFrame =
-    // AUTO-ROUTE past the literal-plan cliff (r15, the knnGraphHier
-    // recipe): at production cluster counts the two-level CASE chain
-    // exceeds [[GraphLiteralMaxTerms]] plan floats — assign via the
-    // spec-pinned bit-equal broadcast-join kernel instead
-    if (SuperProbeDefault.toLong * index.centroids.size *
-        index.centroids.head._2.length > GraphLiteralMaxTerms)
-      semanticPairsHierJoin(embeddings, index, minCos, superK)
-    else semanticPairsFrom(
+    semanticPairsFrom(
       graft.core.CacheScope.persist(
         ivfAssignTwoLevelTo(embeddings, index.centroids, superK)
           .select(col("centroid_id"), col("vec_id"), col("embedding"))),
       minCos)
-
-  /** [[semanticPairsHier]] with the JOIN assignment
-    * ([[ivfAssignTwoLevelJoin]]) — bit-identical pairs (the assignment
-    * is spec-pinned equal), with the plan carrying O(√k·dim) literals
-    * instead of O(superProbe·k·dim): the variant for the k-regime
-    * where the literal plan stops being buildable (see
-    * [[ivfAssignTwoLevelJoin]] for the measured trade at practical k).
-    */
-  def semanticPairsHierJoin(
-      embeddings: DataFrame,
-      index: IvfIndex,
-      minCos: Double = SemDedupMinCos,
-      superK: Int = 0): DataFrame =
-    semanticPairsFrom(
-      graft.core.CacheScope.persist(
-        twoLevelJoinAssigned(embeddings, index.centroids, superK,
-          SuperProbeDefault, carry = Seq.empty)
-          .select(col("centroid_id"), col("vec_id"), col("embedding"))),
-      minCos)
-
-  /** [[semanticDedupHier]] over the join-assignment path. */
-  def semanticDedupHierJoin(
-      embeddings: DataFrame,
-      index: IvfIndex,
-      minCos: Double = SemDedupMinCos,
-      superK: Int = 0): DataFrame =
-    semanticDedupFrom(embeddings,
-      semanticPairsHierJoin(embeddings, index, minCos, superK))
 
   /** Within-cell pair kernel shared by the flat and hierarchical
     * assignment paths: co-located self-join on `centroid_id`, 6-dp
@@ -3670,11 +3420,12 @@ object Similarity {
   /** [[prunePrototypes]] over the TWO-LEVEL assignment — the production
     * path at corpus-scaled nCentroids, where the flat O(n·k·dim)
     * literal argmin is itself the super-linear term (the SemDeDup hier
-    * story applied to pruning). The prototypicality score comes from a
-    * broadcast join against the (centroid_id, cvec) table (O(√k·dim)
-    * literals in the assignment plan, k never enters it); rank
-    * semantics are the shared [[pruneRank]] kernel, identical to the
-    * declared key's.
+    * story applied to pruning). The assignment is
+    * [[ivfAssignTwoLevelTo]], so past the literal budget it routes to
+    * the broadcast member-table join like every two-level consumer;
+    * the prototypicality score comes from a broadcast join against the
+    * (centroid_id, cvec) table, and rank semantics are the shared
+    * [[pruneRank]] kernel, identical to the declared key's.
     */
   def prunePrototypesHier(
       embeddings: DataFrame,

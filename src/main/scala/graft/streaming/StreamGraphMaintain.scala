@@ -14,7 +14,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   * face 13 completed the IVF story: build offline
   * ([[Similarity.knnGraph]] + writeGraphClustered), serve
   * ([[Similarity.graphSearch]] walks the persisted edges), refine
-  * ([[Similarity.knnGraphRefine]]), and now MAINTAIN.
+  * ([[Similarity.knnGraphRefineIter]]), and now MAINTAIN.
   *
   * Exactly-once effect from an at-least-once sink, with NO transaction
   * log, across BOTH artifacts: each batch is first anti-joined against
@@ -153,23 +153,6 @@ object StreamGraphMaintain {
           ()
         }
       }
-
-  /** Convenience: one AvailableNow layered maintenance pass. */
-  def maintainHnswOnce(
-      spark: SparkSession,
-      vectors: DataFrame,
-      index: Similarity.IvfIndex,
-      vecPath: String,
-      hnswPath: String,
-      checkpointDir: String,
-      k: Int = 4,
-      nProbe: Int = 4): StreamingQuery = {
-    val q = maintainHnsw(vectors, index, vecPath, hnswPath, k, nProbe)
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.awaitTermination()
-    q
-  }
 
   /** Convenience: run one AvailableNow maintenance pass to completion. */
   def maintainOnce(

@@ -69,24 +69,6 @@ object StreamSimilarity {
       shortlist: Int = Similarity.IvfPqShortlist): DataFrame =
     Similarity.knnJoinPq(embeddings, probes, k, nCentroids, nProbe, shortlist)
 
-  /** [[topKSink]]'s production twin: every micro-batch is answered
-    * with [[topKBatchPq]] (IVF-PQ with re-ranking) and handed to
-    * `sink`.
-    */
-  def topKPqSink(
-      probeStream: DataFrame,
-      embeddings: DataFrame,
-      k: Int = 10,
-      nCentroids: Int = 16,
-      nProbe: Int = 4,
-      shortlist: Int = Similarity.IvfPqShortlist)(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    probeStream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      if (!batch.isEmpty)
-        sink(topKBatchPq(batch, embeddings, k, nCentroids, nProbe, shortlist), id)
-      ()
-    }
-
   /** Attach the retrieval sink to a probe stream: every micro-batch is
     * answered with [[topKBatch]] against the static corpus and handed
     * to `sink` (write to a table, push to a serving store, ...).

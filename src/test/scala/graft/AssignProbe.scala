@@ -10,7 +10,8 @@ import graft.ext.Similarity
   * (the negative result: the literal CASE chain beats the broadcast
   * join 2.3× at k=1600; the join variant is for the k-regime where
   * the literal plan stops being buildable).
-  * Modes: twolevel (literal CASE chain), join (broadcast member table).
+  * Modes: twolevel (literal CASE chain), join (broadcast member table)
+  * — each forced through the literal-budget seam, whatever k.
   */
 object AssignProbe {
   def main(args: Array[String]): Unit = {
@@ -28,9 +29,11 @@ object AssignProbe {
       .zipWithIndex.map { case ((_, v), i) => i.toLong -> v }
     for (mode <- modes; run <- 1 to 3) {
       val assigned = mode match {
-        case "twolevel" => Similarity.ivfAssignTwoLevelTo(e, cents)
-        case "join"     => Similarity.ivfAssignTwoLevelJoin(e, cents)
-        case other      => sys.error(s"unknown mode: $other")
+        case "twolevel" => Similarity.withLiteralBudget(Long.MaxValue)(
+          Similarity.ivfAssignTwoLevelTo(e, cents))
+        case "join" => Similarity.withLiteralBudget(0)(
+          Similarity.ivfAssignTwoLevelTo(e, cents))
+        case other => sys.error(s"unknown mode: $other")
       }
       if (run == 1) {
         val plan = assigned.queryExecution.executedPlan.toString

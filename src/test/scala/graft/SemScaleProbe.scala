@@ -41,7 +41,8 @@ object SemScaleProbe {
       val t0 = System.nanoTime()
       val idx = mode match {
         case "hier" =>
-          Similarity.buildIvfIndexFast(e, nCentroids = nc, iterations = 3)
+          Similarity.IvfIndex(
+            Similarity.kMeansCentroidsFast(e, nCentroids = nc, iterations = 3))
         case "sampled" =>
           Similarity.buildIvfIndexSampled(e, nCentroids = nc, iterations = 3)
         case _ =>

@@ -33,12 +33,12 @@ object DeferProbe {
     val (nBase, nBatch) = (base.count(), batch.count())
     val nc = math.max(16, (nBase / 125).toInt)
     val cents = Similarity.seedCentroids(base, nc)
-    val assigned = Similarity.ivfAssignTwoLevelJoin(base, cents)
+    val assigned = Similarity.ivfAssignTwoLevelTo(base, cents)
     def freshLayout(tag: String): String = {
       val p = java.nio.file.Files.createTempDirectory(s"defer-$tag")
         .resolve("g").toString
       Similarity.writeGraphClustered(
-        Similarity.knnGraphHierJoin(base, k = 4, nCentroids = nc),
+        Similarity.knnGraphHier(base, k = 4, nCentroids = nc),
         assigned, p)
       p
     }

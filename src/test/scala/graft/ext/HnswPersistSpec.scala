@@ -189,8 +189,7 @@ class HnswPersistSpec extends SparkSpec {
     // the union's (the high-id tail invariant)
     val nc = 400
     val cents = Similarity.seedCentroids(base, nc)
-    assert(cents.size == nc &&
-      2L * cents.size * cents.head._2.length > Similarity.GraphLiteralMaxTerms,
+    assert(cents.size == nc && !Similarity.literalFits(cents),
       s"fixture under the cliff: ${cents.size} x ${cents.head._2.length}")
     val root = java.nio.file.Files.createTempDirectory("graft-gprod")
     val p = root.resolve("g").toString
@@ -198,17 +197,77 @@ class HnswPersistSpec extends SparkSpec {
     // the stored-cell derivation must place affected vertices where
     // the LAYOUT says, and placement never changes the edge ROWS
     Similarity.writeGraphClustered(
-      Similarity.knnGraphHierJoin(base, k = 4, nCentroids = nc),
+      Similarity.knnGraphHier(base, k = 4, nCentroids = nc),
       base.select(col("vec_id"), (col("vec_id") % 29).as("centroid_id")), p)
     Similarity.appendToGraphClustered(spark, p, base, batch, cents, k = 4)
     val appended = spark.read.parquet(p)
       .select("probe_id", "vec_id", "label", "cosine")
       .orderBy(col("probe_id"), col("cosine").desc, col("vec_id"))
       .collect().map(_.toSeq).toSeq
-    val rebuilt = Similarity.knnGraphHierJoin(embs, k = 4, nCentroids = nc)
+    val rebuilt = Similarity.knnGraphHier(embs, k = 4, nCentroids = nc)
       .collect().map(_.toSeq).toSeq
     assert(appended == rebuilt,
       "production-nc append diverged from the hier-join rebuild")
+    graft.core.CacheScope.releaseAll()
+  }
+
+  test("appendToHnswClustered at mixed nc (base past the literal cliff, upper layers under it): append ≡ rebuild on every layer") {
+    // each layer must be BUILT on the kernels its appends run: the base
+    // at nc=400 (past the cliff: two-level join kernels), the upper
+    // layers at nc=16 (flat). nc ∝ layer size, in 200-vector steps so
+    // the base and the union land on the same nc (the frozen-quantizer
+    // invariant of the high-id tail)
+    val ncOf: Long => Int = n => math.max(16, (n / 200 * 200).toInt)
+    val maxId = embs.agg(max("vec_id")).collect()(0).getLong(0)
+    val arriving = col("vec_id") >= maxId - maxId / 50
+    val base = embs.filter(!arriving)
+    val batch = embs.filter(arriving)
+    val nc0 = ncOf(base.count())
+    val cents = Similarity.seedCentroids(base, nc0)
+    assert(nc0 == ncOf(embs.count()) && !Similarity.literalFits(cents),
+      s"base layer under the cliff at nc=$nc0")
+    for (l <- 1 to 2) {
+      val sub = embs.filter(Similarity.hnswLayerPredicate(l, 4))
+      assert(Similarity.literalFits(
+        Similarity.seedCentroids(sub, ncOf(sub.count()))),
+        s"layer $l past the cliff")
+    }
+    val root = java.nio.file.Files.createTempDirectory("graft-hnswmix")
+    val path = root.resolve("hnsw").toString
+    Similarity.writeHnswClustered(spark, base, path, levels = 2, ratio = 4,
+      k = 4, nCentroidsOf = Some(ncOf), nCentroids = nc0)
+    Similarity.appendToHnswClustered(spark, path, base, batch, cents, k = 4,
+      nCentroidsOf = Some(ncOf))
+    val idx = Similarity.readHnswClustered(spark, path)
+    val rebuilt = Similarity.hnswLayerGraphs(embs, levels = 2, ratio = 4,
+      k = 4, nCentroidsOf = Some(ncOf))
+    for (l <- 0 to 2)
+      assert(rowsOf(idx.layers(l)) == rowsOf(rebuilt(l)),
+        s"appended layer $l diverged from the rebuild over the union")
+    graft.core.CacheScope.releaseAll()
+  }
+
+  test("writeHnswClustered/appendToHnswClustered under withLiteralBudget(0): the concurrent layer builds and appends take the caller's route") {
+    val (cents, base, batch) = layerSplit(2, 4)
+    val root = java.nio.file.Files.createTempDirectory("graft-hnswbudget")
+    val path = root.resolve("hnsw").toString
+    val joined = Similarity.withLiteralBudget(0) {
+      Similarity.writeHnswClustered(spark, base, path, levels = 2,
+        ratio = 4, k = 4)
+      Similarity.appendToHnswClustered(spark, path, base, batch, cents,
+        k = 4)
+      Similarity.hnswLayerGraphs(embs, levels = 2, ratio = 4, k = 4)
+    }
+    // at nc=16 the two-level join route places some vectors in other
+    // cells than the flat argmin, so a layer built or appended under
+    // the default budget would show in the rows
+    val flat = Similarity.hnswLayerGraphs(embs, levels = 2, ratio = 4, k = 4)
+    assert((0 to 2).exists(l => rowsOf(joined(l)) != rowsOf(flat(l))),
+      "fixture: the join and flat routes agree on every layer")
+    val idx = Similarity.readHnswClustered(spark, path)
+    for (l <- 0 to 2)
+      assert(rowsOf(idx.layers(l)) == rowsOf(joined(l)),
+        s"layer $l diverged from the budget-0 rebuild over the union")
     graft.core.CacheScope.releaseAll()
   }
 

@@ -33,11 +33,12 @@ object HnswScaleProbe {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     probes.count()
     // frozen artifacts, built once outside the timers — with the
-    // PRODUCTION build path (nc ∝ corpus at ~125/cell, hier join),
-    // since the fixed-nc flat kernel's candidate mass is quadratic
-    // per decade (SCALE.md's documented fixture property)
+    // PRODUCTION build path (nc ∝ corpus at ~125/cell; two-level join
+    // kernels past the literal-plan cliff), since the fixed-nc flat
+    // kernel's candidate mass is quadratic per decade (SCALE.md's
+    // documented fixture property)
     val layers = Similarity.hnswLayerGraphs(e, levels = 2, ratio = 4, k = 4,
-        nCentroidsOf = Some(c => math.max(16, (c / 125).toInt)), hier = true)
+        nCentroidsOf = Some(c => math.max(16, (c / 125).toInt)))
       .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     layers.foreach(_.count())
     val entry = Similarity.seedCentroids(e, 16).map(_._1)
@@ -92,8 +93,7 @@ object HnswScaleProbe {
       .resolve("h").toString
     val tw0 = System.nanoTime()
     Similarity.writeHnswClustered(spark, base, hPath, levels = 2, ratio = 4,
-      k = 4, nCentroidsOf = Some(ncOf), hier = true,
-      nCentroids = ncOf(nBase))
+      k = 4, nCentroidsOf = Some(ncOf), nCentroids = ncOf(nBase))
     val tWrite = (System.nanoTime() - tw0) / 1e9
     println(f"HNSWSTORED $sfDir base=$nBase nc=${ncOf(nBase)} write=$tWrite%.3f s")
     for (run <- 1 to 3) {

@@ -18,9 +18,10 @@ object KnnGraphScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     // a spec is `nc` (flat — the declared-key kernel), `nc:hier`
-    // (two-level literal assignment + literal probe lists), or
-    // `nc:hierjoin` (both stages as broadcast joins — the path past
-    // the literal-expression cliff, r13 verdict #2)
+    // (two-level, auto-routed: literal under the plan budget, broadcast
+    // joins past it), or `nc:hierjoin` (both stages forced onto the
+    // broadcast joins — the path past the literal-expression cliff,
+    // r13 verdict #2)
     val specs =
       if (args.length > 1) args.drop(1).toSeq.map { s =>
         val parts = s.split(":")
@@ -39,7 +40,8 @@ object KnnGraphScaleProbe {
       val t0 = System.nanoTime()
       val edges = (mode match {
         case "hier" => Similarity.knnGraphHier(e, k = 4, nCentroids = nc)
-        case "hierjoin" => Similarity.knnGraphHierJoin(e, k = 4, nCentroids = nc)
+        case "hierjoin" => Similarity.withLiteralBudget(0)(
+          Similarity.knnGraphHier(e, k = 4, nCentroids = nc))
         case _ => Similarity.knnGraph(e, k = 4, nCentroids = nc)
       }).count()
       val tg = (System.nanoTime() - t0) / 1e9

@@ -7,6 +7,15 @@ class SimilaritySpec extends SparkSpec {
 
   private lazy val embs = Sources.table(spark, "/root/testdata/sf0.001", "embeddings")
 
+  /** Does `df`'s plan take a two-level JOIN route — the broadcast
+    * (sid, cid, cvec) member-table join?
+    */
+  private def memberJoined(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join
+          if j.condition.exists(_.references.exists(_.name == "sid")) => j
+    }.nonEmpty
+
   /** Brute-force reference computed driver-side from collected vectors. */
   private def bruteTopK(probe: Seq[Float], k: Int): Seq[(Long, Double)] = {
     val all = embs.collect().map { r =>
@@ -752,7 +761,8 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("buildIvfIndexFast + semanticDedupHier: full hierarchical path end-to-end") {
-    val index = Similarity.buildIvfIndexFast(embs, nCentroids = 16, iterations = 3)
+    val index = Similarity.IvfIndex(
+      Similarity.kMeansCentroidsFast(embs, nCentroids = 16, iterations = 3))
     assert(index.centroids.size == 16)
     assert(index.centroids.forall(_._2.length == 64))
     val dropsWanted = Similarity.semanticPairsHier(embs, index)
@@ -770,7 +780,9 @@ class SimilaritySpec extends SparkSpec {
     val literal = Similarity.ivfAssignTwoLevelTo(embs, index.centroids)
       .select("vec_id", "centroid_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val joined = Similarity.ivfAssignTwoLevelJoin(embs, index.centroids)
+    val joined = Similarity.withLiteralBudget(0)(
+      Similarity.ivfAssignTwoLevelTo(embs, index.centroids))
+    assert(memberJoined(joined), "budget 0 must take the join route")
     assert(joined.columns.toSet ==
       Set("vec_id", "embedding", "label", "centroid_id"))
     val got = joined.select("vec_id", "centroid_id").collect()
@@ -785,7 +797,8 @@ class SimilaritySpec extends SparkSpec {
       portable = true)
     val lit = Similarity.semanticPairsHier(embs, index).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    val jn = Similarity.semanticPairsHierJoin(embs, index).collect()
+    val jn = Similarity.withLiteralBudget(0)(
+      Similarity.semanticPairsHier(embs, index)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(jn.nonEmpty && jn.toSeq == lit.toSeq)
   }
@@ -809,7 +822,7 @@ class SimilaritySpec extends SparkSpec {
     val full = Similarity.kMeansCentroidsSampled(
       df, nCentroids = 4, iterations = 3, samplePerCell = 1000)
     assert(full.size == 4 && full.forall(_._2.length == dim))
-    val assignedFull = Similarity.ivfAssignTwoLevelJoin(df, full)
+    val assignedFull = Similarity.ivfAssignTwoLevelTo(df, full)
       .select("label", "centroid_id").collect()
       .map(r => r.getInt(0) -> r.getLong(1))
     val byCluster = assignedFull.groupBy(_._1).map { case (c, xs) =>
@@ -828,7 +841,7 @@ class SimilaritySpec extends SparkSpec {
       df, nCentroids = 4, iterations = 3, samplePerCell = 8)
     assert(sampled.size == 4 && sampled.forall(_._2.length == dim))
     val validIds = sampled.map(_._1).toSet
-    val assignedSampled = Similarity.ivfAssignTwoLevelJoin(df, sampled)
+    val assignedSampled = Similarity.ivfAssignTwoLevelTo(df, sampled)
       .select("vec_id", "centroid_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1))
     assert(assignedSampled.length == 200)
@@ -949,6 +962,28 @@ class SimilaritySpec extends SparkSpec {
       "hier D4 verdicts must cover exactly the hier dedup survivors")
   }
 
+  test("prunePrototypesHier: past the literal cliff it assigns by member-table join") {
+    // 2 probes · 400 cells · dim 64 = 51200 literal floats — past the
+    // budget, so the assignment must route like every two-level consumer
+    val index = Similarity.IvfIndex(Similarity.seedCentroids(embs, 400))
+    assert(!Similarity.literalFits(index.centroids), "fixture under the cliff")
+    val pruned = Similarity.prunePrototypesHier(embs, index)
+    assert(memberJoined(pruned), "past the cliff the assignment must be a join")
+    assert(pruned.count() == embs.count(), "every vector must carry a verdict")
+  }
+
+  test("prunePrototypesHier: join-route rows equal the literal route's") {
+    val index = Similarity.buildIvfIndexSampled(embs, nCentroids = 8,
+      iterations = 3, samplePerCell = 16, superK = 3)
+    val literal = Similarity.prunePrototypesHier(embs, index, superK = 3)
+    assert(!memberJoined(literal))
+    val joined = Similarity.withLiteralBudget(0)(
+      Similarity.prunePrototypesHier(embs, index, superK = 3))
+    assert(memberJoined(joined), "budget 0 must take the join route")
+    val want = literal.collect().map(_.toSeq).toSeq
+    assert(want.nonEmpty && joined.collect().map(_.toSeq).toSeq == want)
+  }
+
   test("ivfDrift: per-cell cohesion replayed driver-side; drift signs sane") {
     val indexed = embs.filter("vec_id % 4 <> 0")
     val batch = embs.filter("vec_id % 4 = 0")
@@ -1051,12 +1086,16 @@ class SimilaritySpec extends SparkSpec {
     def edges(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSeq
     val lit2 = edges(Similarity.knnGraphHier(embs, k = 4, superK = 4, superProbe = 2))
-    val join2 = edges(Similarity.knnGraphHierJoin(embs, k = 4, superK = 4, superProbe = 2))
-    assert(join2 == lit2, "join-shaped hier graph diverged from the literal two-level path")
+    val join2 = Similarity.withLiteralBudget(0)(
+      Similarity.knnGraphHier(embs, k = 4, superK = 4, superProbe = 2))
+    assert(memberJoined(join2), "budget 0 must take the join route")
+    assert(edges(join2) == lit2,
+      "join-shaped hier graph diverged from the literal two-level path")
     // fallback parity: probing ALL supers degrades the join variant to
     // the flat graph exactly, like the literal variant
     val flat4 = edges(Similarity.knnGraph(embs, k = 4))
-    val joinAll = edges(Similarity.knnGraphHierJoin(embs, k = 4, superK = 4, superProbe = 4))
+    val joinAll = edges(Similarity.withLiteralBudget(0)(
+      Similarity.knnGraphHier(embs, k = 4, superK = 4, superProbe = 4)))
     assert(joinAll == flat4, "all-supers-probed join variant diverged from flat")
   }
 
@@ -1088,7 +1127,8 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.9,
       f"hier edge recall vs flat on clustered data: $recall%.4f (need >= 0.9)")
     // the join-shaped variant is bit-identical to hier at this k too
-    val hierJoin = Similarity.knnGraphHierJoin(rows, k = k, nCentroids = nc)
+    val hierJoin = Similarity.withLiteralBudget(0)(
+      Similarity.knnGraphHier(rows, k = k, nCentroids = nc))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(hierJoin.toSeq == hier.toSeq,
       "join variant diverged from literal hier at nc=64")
@@ -1114,7 +1154,7 @@ class SimilaritySpec extends SparkSpec {
       edges.count(exact.contains).toDouble / exact.size
     }
     val base = recall(Similarity.knnGraph(embs, k = k))
-    val refined = recall(Similarity.knnGraphRefine(embs, k = k))
+    val refined = recall(Similarity.knnGraphRefineIter(embs, k = k, rounds = 1))
     info(f"recall vs exact: base $base%.4f -> refined $refined%.4f")
     // direct edges are in the candidate set and rank keeps the best k
     // of a superset: recall is monotone non-decreasing by construction,
@@ -1123,16 +1163,11 @@ class SimilaritySpec extends SparkSpec {
     assert(refined >= base + 0.01,
       f"refinement should measurably improve recall here: $base%.4f -> $refined%.4f")
     // structural invariants match the base graph's
-    val r = Similarity.knnGraphRefine(embs, k = k).collect()
+    val r = Similarity.knnGraphRefineIter(embs, k = k, rounds = 1).collect()
       .map(x => (x.getLong(0), x.getLong(1)))
     assert(r.forall { case (p, v) => p != v })
     assert(r.groupBy(_._1).values.forall(_.length <= k))
-
-    // iterated NN-Descent: rounds=1 IS the one-round kernel bit-for-bit
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
-    assert(rows(Similarity.knnGraphRefineIter(embs, k = k, rounds = 1)) ==
-      rows(Similarity.knnGraphRefine(embs, k = k)),
-      "rounds=1 diverged from the one-round refine kernel")
+    val eng1 = r.toSet
     // recall is monotone non-decreasing in rounds (each round's
     // candidates contain the previous round's surviving edges)
     val r2 = recall(Similarity.knnGraphRefineIter(embs, k = k, rounds = 2))
@@ -1150,8 +1185,6 @@ class SimilaritySpec extends SparkSpec {
         }.toSeq.sortBy { case (v, c) => (-c, v) }.take(k).map { case (v, _) => (p, v) }
       }
     }
-    val eng1 = Similarity.knnGraphRefine(embs, k = k).collect()
-      .map(x => (x.getLong(0), x.getLong(1))).toSet
     val eng2 = Similarity.knnGraphRefineIter(embs, k = k, rounds = 2).collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
     assert(roundOnce(eng1) == eng2,
